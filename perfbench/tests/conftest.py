@@ -1,0 +1,8 @@
+import os
+import sys
+
+# the benchmark's modules import each other as top-level modules, the
+# way perfbench/run.py sees them
+HERE = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, os.path.dirname(HERE))
+sys.path.insert(0, os.path.dirname(os.path.dirname(HERE)))
