@@ -45,6 +45,7 @@ a single rename on any HDFS-compatible store.
 from __future__ import annotations
 
 import base64
+import datetime
 import hashlib
 import json
 import os
@@ -320,6 +321,47 @@ def bucket_expr_for(
     if m.hash_fn == "murmur3":
         return F.pmod(F.hash(*cols), F.lit(nb)).cast("int")
     return F.pmod(F.xxhash64(*cols), F.lit(nb)).cast("int")
+
+
+def local_frame(spark: SparkSession, rows: list[tuple], schema: T.StructType) -> DataFrame:
+    """A driver-built frame as a ``LocalRelation``: the rows travel as
+    one Arrow table inside the plan (``PythonSQLUtils.toDataFrame``),
+    so Catalyst folds deterministic projections over them on the
+    driver (``ConvertToLocalRelation``) and collecting such a frame
+    runs no Spark job. ``createDataFrame(list, schema)`` parallelizes
+    an RDD instead, and every action on it is a job — even on an empty
+    list. Every frame this module builds from driver-side values goes
+    through here."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    pa_schema = to_arrow_schema(schema)
+    cols = list(zip(*rows)) or [()] * len(pa_schema)
+    tbl = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, pa_schema)], schema=pa_schema
+    )
+    return spark.createDataFrame(tbl, schema)
+
+
+def _utc_instant(v: datetime.datetime) -> datetime.datetime:
+    """The UTC instant PySpark stores for a TimestampType value (a
+    naive datetime is local time)."""
+    us = T.TimestampType().toInternal(v)
+    return datetime.datetime(1970, 1, 1, tzinfo=datetime.timezone.utc) + datetime.timedelta(
+        microseconds=us
+    )
+
+
+def _json_key_value(v):
+    """``json.dumps`` fallback for key values JSON has no type for, in
+    the text forms Spark's JSON reader parses back to the same value
+    (binary as base64, date/timestamp as ISO-8601, decimal as its
+    exact digits)."""
+    if isinstance(v, (bytes, bytearray)):
+        return base64.b64encode(v).decode()
+    if hasattr(v, "isoformat"):
+        return v.isoformat()
+    return str(v)
 
 
 def conform_arrow(t, schema):
@@ -1211,7 +1253,7 @@ class LakeTable:
         if delta_b:
             parts.append(self._read_merged_buckets(m, delta_b, prefilter=key_safe))
         if not parts:
-            out = self.spark.createDataFrame([], m.schema)
+            out = local_frame(self.spark, [], m.schema)
         else:
             out = parts[0]
             for p in parts[1:]:
@@ -1299,8 +1341,10 @@ class LakeTable:
                     if alive.num_rows:
                         yield from alive.to_batches()
 
-        bl = self.spark.createDataFrame(
-            [(b,) for b in bucket_ids], "bucket int"
+        bl = local_frame(
+            self.spark,
+            [(b,) for b in bucket_ids],
+            T.StructType([T.StructField("bucket", T.IntegerType())]),
         ).repartition(len(bucket_ids), F.col("bucket"))
         return bl.mapInArrow(merge_read, schema=schema)
 
@@ -1310,43 +1354,75 @@ class LakeTable:
         GetRange (``OtsReaderSlaveProxy.java`` keyed scan), done with
         bucket pruning instead of an index: the requested keys hash to
         at most ``len(key_values)`` buckets, so the scan touches
-        O(|touched buckets|) files regardless of table size, then a
-        broadcast semi-join keeps exactly the requested keys.
+        O(|touched buckets|) files regardless of table size.
+
+        On a copy-on-write snapshot the returned frame is ONE Spark job
+        (the parquet scan of the touched buckets) and building it
+        launches none:
+
+        * the key list becomes an Arrow-backed ``LocalRelation``
+          (:func:`local_frame`), and the bucket ids are its
+          ``bucket_expr_for`` projection, folded on the driver by
+          Catalyst — the same JVM murmur3/xxhash64 expression the
+          writer uses, never reimplemented in Python;
+        * the requested key VALUES are pushed as per-column ``IN``
+          literal predicates (a bounded point-lookup list): Catalyst
+          pushes them to the parquet scan (row-group stats /
+          dictionary pruning — surgical after a sorted compaction), and
+          the manifest's stats and blooms on key columns skip whole
+          files;
+        * that per-column conjunction is a superset of the requested
+          tuples (``("r1","b")`` and ``("r2","a")`` admit
+          ``("r1","a")``), so an exact filter on the pruned read —
+          ``struct(keys)`` contained in one constant-folded array of
+          the requested tuples — is the arbiter: no join, so no
+          broadcast job.
 
         MoR-aware (goes through :meth:`read`, so pending deltas are
         merged and tombstoned keys correctly come back absent) and
-        time-travel-aware (``version``). The bucket computation is one
-        tiny Spark job over the key list itself, using the same JVM
-        xxhash64 as the writer — never reimplemented driver-side.
-
-        Beyond bucket pruning, the requested key VALUES are pushed as
-        per-column ``IN`` literal predicates (a bounded point-lookup
-        list): Catalyst pushes them to the parquet scan (row-group
-        stats / dictionary pruning — surgical after a sorted
-        compaction), and when the table keeps manifest stats on a key
-        column they also skip whole files. The per-column conjunction
-        is a superset of the requested tuples; the broadcast semi-join
-        stays the exact arbiter.
+        time-travel-aware (``version``: a number or a tag). The read is
+        pinned to the snapshot the buckets were planned on, so a
+        concurrent commit — a rebucket in particular — cannot swap the
+        layout under the plan. Keys are non-null by contract: a tuple
+        containing ``None`` matches no row; duplicates are harmless.
         """
         m = self.manifest(version)
+        keys = list(m.key_cols)
         # tuples are positional: field order must follow key_cols, not
         # the table schema
         by_name = {f.name: f for f in m.schema.fields}
-        kschema = T.StructType([by_name[k] for k in m.key_cols])
-        if not key_values:
-            return self.spark.createDataFrame([], m.schema)
-        kdf = self.spark.createDataFrame(key_values, kschema)
-        bexpr = bucket_expr_for(m)
-        bs = sorted(
-            r[0] for r in kdf.select(bexpr.alias("__b")).distinct().collect()
-        )  # bounded by |key_values| — a point-lookup list, not data
-        kflt = [
-            (k, "in", sorted({kv[i] for kv in key_values}))
-            for i, k in enumerate(m.key_cols)
-        ]
-        return self.read(buckets=bs, version=version, filters=kflt).join(
-            F.broadcast(kdf), on=list(m.key_cols), how="left_semi"
+        kschema = T.StructType([by_name[k] for k in keys])
+        # a naive datetime means local time, as in createDataFrame and
+        # lit(); pin it to its UTC instant so the Arrow key frame and
+        # the JSON literal (both read naive values as UTC) agree
+        instant = [isinstance(by_name[k].dataType, T.TimestampType) for k in keys]
+        want = list(
+            dict.fromkeys(
+                tuple(
+                    _utc_instant(v) if ts and v.tzinfo is None else v
+                    for v, ts in zip(kv, instant)
+                )
+                for kv in key_values
+                if all(v is not None for v in kv)
+            )
         )
+        if not want:
+            return local_frame(self.spark, [], m.schema)
+        kdf = local_frame(self.spark, want, kschema)
+        # bounded by |key_values| — a point-lookup list, not data
+        bs = sorted({r[0] for r in kdf.select(bucket_expr_for(m)).collect()})
+        kflt = [(k, "in", sorted({kv[i] for kv in want})) for i, k in enumerate(keys)]
+        # the requested tuples as ONE typed array<struct<keys>> literal:
+        # a JSON string decoded by from_json and constant-folded by
+        # Catalyst — one Python→JVM call however many keys, where a
+        # Column literal per value costs dozens of py4j round trips
+        tuples = F.from_json(
+            F.lit(json.dumps([dict(zip(keys, kv)) for kv in want], default=_json_key_value)),
+            T.ArrayType(kschema),
+            {"mode": "FAILFAST"},
+        )
+        exact = F.array_contains(tuples, F.struct(*keys))
+        return self.read(buckets=bs, version=m.version, filters=kflt).filter(exact)
 
     def changes(
         self,
@@ -1510,10 +1586,16 @@ class LakeTable:
                 )
             for i, p in enumerate(m.delta_files.get(b, [])):
                 rows.append((int(b), "delta", i + 1, p, None))
-        return self.spark.createDataFrame(
-            rows,
-            "bucket int, kind string, seq int, path string, stats_json string",
+        schema = T.StructType(
+            [
+                T.StructField("bucket", T.IntegerType()),
+                T.StructField("kind", T.StringType()),
+                T.StructField("seq", T.IntegerType()),
+                T.StructField("path", T.StringType()),
+                T.StructField("stats_json", T.StringType()),
+            ]
         )
+        return local_frame(self.spark, rows, schema)
 
     def new_txn_dir(self) -> str:
         d = os.path.join(self.root, "data", f"txn-{uuid.uuid4().hex[:12]}")

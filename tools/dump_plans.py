@@ -158,6 +158,33 @@ def main() -> None:
         ["FullOuter", "xxhash64", "!CartesianProduct", "!BroadcastNestedLoopJoin"],
     ))
 
+    # 6b. Point lookup: one bucket-pruned parquet scan, key literals
+    # pushed, the exact tuple check a filter — no join, no exchange
+    lroot = tempfile.mkdtemp(prefix="dump_plans_lookup_")
+    lt = LakeTable.create(
+        spark, lroot,
+        schema=spark.createDataFrame([], "repo string, path string, v long").schema,
+        key_cols=["repo", "path"], num_buckets=4,
+    )
+    merge_into(lt, spark.createDataFrame(
+        [(f"r{i:03d}", f"p{i:03d}", i, "U") for i in range(200)],
+        "repo string, path string, v long, op string",
+    )).commit()
+    sections.append((
+        "Point lookup (lake.table.LakeTable.lookup)",
+        "A copy-on-write lookup is ONE Spark job: a parquet scan of the "
+        "touched buckets' files. The requested key values ride "
+        "PushedFilters as per-column IN lists (row-group stats / "
+        "dictionary pruning), and the exact tuple check is a filter "
+        "against one constant-folded array of the requested keys — the "
+        "per-column IN conjunction alone would admit (r007, p150). The "
+        "key list is a LocalRelation folded on the driver for bucket "
+        "planning, so no broadcast, exchange or join appears.",
+        plan_of(lt.lookup([("r007", "p007"), ("r150", "p150")])),
+        ["PushedFilters", "r007", "p150", "array_contains",
+         "!BroadcastExchange", "!Exchange", "!Join"],
+    ))
+
     # 7. Storage-partitioned merge: exactly ONE Exchange (the epoch
     # batch, grouped by bucket); the current table side never appears
     # as a Spark scan at all — each bucket task reads its own files
